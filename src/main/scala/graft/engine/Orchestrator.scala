@@ -339,7 +339,8 @@ object Orchestrator {
     * etl_engine.rs:25-65). Nothing is materialized unless something
     * demands it: the C1 export collects only the (bounded) intermediate
     * branch, the sink write is its own action, and the record count is
-    * deferred behind `PipelineOutcome.recordCount`. */
+    * deferred behind `PipelineOutcome.recordCount` — or taken from the
+    * sink when a single-file/ZIP render already counted the rows. */
   def runPipeline(
       spark: SparkSession,
       p: PipelineDef,
@@ -379,13 +380,14 @@ object Orchestrator {
     } catch { case scala.util.control.NonFatal(e) =>
       throw PhaseFailed("transform", e, None) }
     exportShared(p, ctx, intermediate)
-    val (outPath, lMs) = timed(
+    val (written, lMs) = timed(
       try p.load.map { l =>
-        Sinks.write(spark, main, intermediate, l, p.name, ctx.executionId)
+        Sinks.writeCounted(spark, main, intermediate, l, p.name, ctx.executionId)
       } catch { case scala.util.control.NonFatal(e) =>
         throw PhaseFailed("load", e, Some(main)) })
-    PipelineOutcome(p.name, Some(main), outPath, 0L, "succeeded", None,
-      () => main.count(), extractMs = eMs, transformMs = tMs, loadMs = lMs)
+    PipelineOutcome(p.name, Some(main), written.map(_.location), 0L, "succeeded", None,
+      () => written.flatMap(_.rows).getOrElse(main.count()),
+      extractMs = eMs, transformMs = tMs, loadMs = lMs)
   }
 
   /** Extract phase: source dispatch (S1-S9) then the data_processing

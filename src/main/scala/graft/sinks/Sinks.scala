@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64}
 
 import graft.config.LoadDef
@@ -17,11 +17,14 @@ import graft.operators.Ops
   *  - distributed (the 100 TB path): every format written by the
   *    DataFrameWriter straight to the target directory — no driver
   *    bytes, no coalesce, any Hadoop scheme (file://, s3a://, hdfs://).
-  *  - single-file + optional ZIP (reference parity, W6): formats are
-  *    rendered to one part each (coalesce(1)) in a scratch dir, then the
-  *    driver streams them into `<name>.zip` via java.util.zip + the
-  *    Hadoop FileSystem API. Single-file semantics are inherently
-  *    driver-side (SURVEY §2.10 W6) and meant for small exports.
+  *  - single-file + optional ZIP (reference parity, W6): each format is
+  *    rendered in ONE Spark job — every task turns its partition into a
+  *    text chunk, the driver concatenates the chunks in partition order
+  *    — and written (or packed into `<name>.zip` via java.util.zip)
+  *    through the Hadoop FileSystem API. Single-file semantics are
+  *    inherently driver-side (SURVEY §2.10 W6) and meant for small
+  *    exports: the whole file is held in driver memory, bounded by the
+  *    row cap and `spark.driver.maxResultSize`.
   */
 object Sinks {
 
@@ -33,22 +36,39 @@ object Sinks {
       intermediate: Option[DataFrame],
       load: LoadDef,
       pipelineName: String,
-      executionId: String): String = {
+      executionId: String): String =
+    writeCounted(spark, df, intermediate, load, pipelineName, executionId).location
+
+  /** What a sink write produced: the output location and, when the sink
+    * rendered `df` on the driver (single-file or ZIP), its row count. */
+  final case class Written(location: String, rows: Option[Long])
+
+  /** [[write]], also returning the row count a single-file/ZIP render
+    * already knows, so the caller need not run a count job for it. */
+  def writeCounted(
+      spark: SparkSession,
+      df: DataFrame,
+      intermediate: Option[DataFrame],
+      load: LoadDef,
+      pipelineName: String,
+      executionId: String): Written = {
     val baseName = graft.config.Templates.substFilename(
       load.filenamePattern, pipelineName, executionId)
     if (load.zip) writeZip(spark, df, intermediate, load, baseName, pipelineName, executionId)
     else if (load.singleFile) {
-      load.formats.foreach { fmt =>
+      val rows = load.formats.map { fmt =>
         val target = s"${load.outputPath}/${fileName(load, fmt, baseName)}"
-        writeBytes(spark, target, renderSingle(df, fmt, load.singleFileMaxRows))
+        val r = render(df, fmt, load.singleFileMaxRows)
+        writeBytes(spark, target, r.bytes)
+        r.rows
       }
-      load.outputPath
+      Written(load.outputPath, rows.headOption)
     } else {
       load.formats.foreach { fmt =>
         writeDistributed(df, fmt, s"${load.outputPath}/${baseName}_$fmt",
           load.partitionBy, load.mode, load.maxRecordsPerFile)
       }
-      load.outputPath
+      Written(load.outputPath, None)
     }
   }
 
@@ -91,29 +111,25 @@ object Sinks {
 
   final case class SingleFileTooLarge(rows: Long, cap: Long)
       extends RuntimeException(
-        s"single-file render exceeded $cap rows (saw > $rows); " +
+        s"single-file render exceeded $cap rows (saw at least $rows); " +
           "use the distributed sink (singleFile = false) for large outputs")
+
+  /** A single-file render: the rows it holds and the file's bytes. */
+  private final case class Rendered(rows: Long, bytes: Array[Byte])
 
   /** Render a DataFrame to one in-memory text blob (reference parity:
     * the reference pre-renders CSV/TSV strings, contextual_pipeline.rs:
-    * 1016-1061; JSON is a pretty array, :1179-1183). Streams via
-    * toLocalIterator (one partition in driver memory at a time) and
-    * hard-fails past `maxRows` — the 100 TB path is writeDistributed. */
+    * 1016-1061; JSON is a pretty array, :1179-1183). One Spark job per
+    * call (see [[renderChunks]]); hard-fails past `maxRows` — the
+    * 100 TB path is writeDistributed. */
   def renderSingle(df: DataFrame, format: String, maxRows: Long = 1000000L): Array[Byte] =
+    render(df, format, maxRows).bytes
+
+  private def render(df: DataFrame, format: String, maxRows: Long): Rendered =
     format match {
       case "csv" => renderSep(df, ",", quote = true, maxRows)
       case "tsv" => renderSep(Ops.sanitizeTsv(df), "\t", quote = false, maxRows)
-      case "json" =>
-        val sb = new StringBuilder("[\n")
-        var n = 0L
-        val it = df.toJSON.toLocalIterator()
-        while (it.hasNext) {
-          if (n >= maxRows) throw SingleFileTooLarge(n, maxRows)
-          if (n > 0) sb.append(",\n")
-          sb.append(it.next())
-          n += 1
-        }
-        sb.append("\n]").toString.getBytes(StandardCharsets.UTF_8)
+      case "json" => renderChunks(df.toJSON, maxRows, "[\n", ",\n", "\n]")(identity)
       case other => throw new IllegalArgumentException(s"unknown single-file format $other")
     }
 
@@ -121,15 +137,9 @@ object Sinks {
     * double inner quotes; null → empty (reference contextual_pipeline.rs:
     * 1017-1041). */
   private def renderSep(
-      df: DataFrame, sep: String, quote: Boolean, maxRows: Long): Array[Byte] = {
+      df: DataFrame, sep: String, quote: Boolean, maxRows: Long): Rendered = {
     val cols = df.columns
-    val sb = new StringBuilder
-    sb.append(cols.mkString(sep)).append('\n')
-    var n = 0L
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      if (n >= maxRows) throw SingleFileTooLarge(n, maxRows)
-      val row = it.next()
+    renderChunks(df, maxRows, cols.mkString(sep) + "\n", "", "") { row =>
       val cells = cols.indices.map { i =>
         val v = row.get(i)
         val s = if (v == null) "" else String.valueOf(v)
@@ -137,11 +147,44 @@ object Sinks {
           "\"" + s.replace("\"", "\"\"") + "\""
         else s
       }
-      sb.append(cells.mkString(sep)).append('\n')
-      n += 1
+      cells.mkString(sep) + "\n"
     }
-    sb.toString.getBytes(StandardCharsets.UTF_8)
   }
+
+  /** Render `ds` in ONE Spark job: each task joins at most `maxRows + 1`
+    * of its rows (`line` each, `sep` between) into one UTF-8 chunk; the
+    * driver collects (rows, chunk) in partition order — a sorted frame
+    * keeps its order — and writes `head`, the non-empty chunks joined by
+    * `sep`, then `tail`. The cap is checked here on the summed rows, so
+    * [[SingleFileTooLarge]] is thrown directly, not wrapped in a task
+    * failure. Driver memory holds the collected chunks: at most `maxRows`
+    * rows on success, and never more than `spark.driver.maxResultSize`. */
+  private def renderChunks[T](
+      ds: Dataset[T], maxRows: Long, head: String, sep: String, tail: String)(
+      line: T => String): Rendered = {
+    val parts = ds.mapPartitions { it =>
+      val sb = new java.lang.StringBuilder
+      var n = 0L
+      while (n <= maxRows && it.hasNext) {
+        if (n > 0) sb.append(sep)
+        sb.append(line(it.next()))
+        n += 1
+      }
+      Iterator(n -> sb.toString.getBytes(StandardCharsets.UTF_8))
+    }(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)).collect()
+    val rows = parts.map(_._1).sum
+    if (rows > maxRows) throw SingleFileTooLarge(rows, maxRows)
+    val out = new ByteArrayOutputStream()
+    out.write(utf8(head))
+    parts.map(_._2).filter(_.nonEmpty).zipWithIndex.foreach { case (chunk, i) =>
+      if (i > 0) out.write(utf8(sep))
+      out.write(chunk)
+    }
+    out.write(utf8(tail))
+    Rendered(rows, out.toByteArray)
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
   /** W6 — ZIP packaging: all formats + optional intermediate.json (W4,
     * only when non-empty) + metadata.json (W5) into one archive. */
@@ -152,7 +195,7 @@ object Sinks {
       load: LoadDef,
       baseName: String,
       pipelineName: String,
-      executionId: String): String = {
+      executionId: String): Written = {
     val buf = new ByteArrayOutputStream()
     val zip = new ZipOutputStream(buf)
     def entry(name: String, bytes: Array[Byte]): Unit = {
@@ -160,12 +203,13 @@ object Sinks {
       zip.write(bytes)
       zip.closeEntry()
     }
-    load.formats.foreach { fmt =>
-      entry(fileName(load, fmt, "output"), renderSingle(df, fmt, load.singleFileMaxRows))
+    val rows = load.formats.map { fmt =>
+      val r = render(df, fmt, load.singleFileMaxRows)
+      entry(fileName(load, fmt, "output"), r.bytes)
+      r.rows
     }
-    intermediate.filter(i => !i.isEmpty).foreach { i =>
-      entry("intermediate.json", renderSingle(i, "json", load.singleFileMaxRows))
-    }
+    intermediate.map(render(_, "json", load.singleFileMaxRows)).filter(_.rows > 0)
+      .foreach(r => entry("intermediate.json", r.bytes))
     if (load.includeMetadata) {
       val ts = java.time.format.DateTimeFormatter.ISO_INSTANT
         .format(java.time.Instant.now())
@@ -176,7 +220,7 @@ object Sinks {
     zip.close()
     val target = s"${load.outputPath}/$baseName.zip"
     writeBytes(spark, target, buf.toByteArray)
-    target
+    Written(target, rows.headOption)
   }
 
   /** W9 — per-format filenames (hardcoded names in the reference). */

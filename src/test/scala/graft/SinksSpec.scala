@@ -145,6 +145,106 @@ class SinksSpec extends AnyFunSuite {
     }
   }
 
+  // ----- one job per format: layout-independent bytes -----------------
+  /** A frame sorted by id, spread over `parts` ordered partitions; the
+    * filter leaves some of them empty. Columns: long, double (NaN too),
+    * nullable long, string with quotes/separators/newlines/unicode, and
+    * a timestamp. */
+  private def typedFrame(parts: Int) = spark.range(0, 64, 1, parts)
+    .filter($"id" % 5 === 0)
+    .select(
+      $"id",
+      when($"id" === 10, lit(Double.NaN)).otherwise($"id" / 4.0).as("dbl"),
+      when($"id" % 3 === 0, lit(null)).otherwise($"id" * -7).as("maybe"),
+      when($"id" === 20, lit(null).cast("string"))
+        .otherwise(concat(lit("q\"uote,"), $"id", lit("\nline\ttab é世界😀"))).as("text"),
+      timestamp_seconds(lit(1700000000.25) + $"id" * 3600).as("ts"))
+
+  test("single-file bytes do not depend on the partition layout " +
+    "(one partition vs many, some empty)") {
+    val one = typedFrame(1)
+    val many = typedFrame(16)
+    val sizes = many.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length === 16 && sizes.count(_ == 0) >= 3,
+      s"the spread layout must have empty partitions: ${sizes.mkString(",")}")
+    Seq("csv", "tsv", "json").foreach { fmt =>
+      val a = Sinks.renderSingle(one, fmt)
+      val b = Sinks.renderSingle(many, fmt)
+      assert(a.sameElements(b), s"$fmt bytes moved with the layout")
+    }
+    val csv = new String(Sinks.renderSingle(many, "csv"), StandardCharsets.UTF_8)
+    assert(csv.startsWith("id,dbl,maybe,text,ts\n0,0.0,,\"q\"\"uote,0\nline\ttab é世界😀\","))
+    assert(csv.contains("\n10,NaN,-70,"))
+    assert(csv.contains("\n20,5.0,-140,,"))
+    val json = new String(Sinks.renderSingle(many, "json"), StandardCharsets.UTF_8)
+    assert(json.split(",\n\\{").length === 13 && json.endsWith("}\n]"))
+  }
+
+  test("an empty frame renders a header-only CSV/TSV and an empty JSON array") {
+    val empty = spark.range(0, 64, 1, 4).filter($"id" < 0).select($"id", $"id".as("v"))
+    def text(fmt: String) = new String(Sinks.renderSingle(empty, fmt), StandardCharsets.UTF_8)
+    assert(text("csv") === "id,v\n")
+    assert(text("tsv") === "id\tv\n")
+    assert(text("json") === "[\n\n]")
+  }
+
+  test("single-file cap holds across partitions that are each under it") {
+    val spread = spark.range(0, 100, 1, 20).toDF("id") // 5 rows per partition
+    Seq("csv", "tsv", "json").foreach { fmt =>
+      val e = intercept[Sinks.SingleFileTooLarge](Sinks.renderSingle(spread, fmt, maxRows = 10))
+      assert(e.cap === 10L && e.rows > 10L)
+      intercept[Sinks.SingleFileTooLarge](
+        Sinks.renderSingle(spark.range(0, 11, 1, 5).toDF("id"), fmt, maxRows = 10))
+    }
+    val exact = spark.range(0, 10, 1, 5).toDF("id")
+    val lines = new String(Sinks.renderSingle(exact, "csv", maxRows = 10),
+      StandardCharsets.UTF_8).split("\n")
+    assert(lines.toSeq === "id" +: (0 until 10).map(_.toString))
+    val json = new String(Sinks.renderSingle(exact, "json", maxRows = 10), StandardCharsets.UTF_8)
+    assert(json === (0 until 10).map(i => s"""{"id":$i}""").mkString("[\n", ",\n", "\n]"))
+  }
+
+  test("a single-file render is one Spark job, whatever the partition count") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val wide = spark.range(0, 1000, 1, 32).toDF("id")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    val sc = spark.sparkContext
+    val formats = Seq("csv", "tsv", "json")
+    sc.addSparkListener(listener)
+    try {
+      formats.foreach { fmt =>
+        sc.setJobGroup(s"render-$fmt", fmt)
+        try Sinks.renderSingle(wide, fmt) finally sc.clearJobGroup()
+      }
+      // listener events post asynchronously: wait for the expected ones,
+      // then a little longer so an extra job would be seen too
+      val deadline = System.nanoTime() + 10000000000L
+      while (groups.size < formats.size && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(300)
+      val perFormat = groups.asScala.toSeq.groupBy(identity).map { case (g, js) => g -> js.size }
+      assert(perFormat === formats.map(f => s"render-$f" -> 1).toMap,
+        "each format must render in exactly one job over 32 partitions")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("writeCounted reports the rendered row count for single-file and " +
+    "ZIP sinks, and none for distributed ones") {
+    val dir = tmpDir()
+    def counted(l: LoadDef) = Sinks.writeCounted(spark, df, None, l, "p", "e").rows
+    assert(counted(LoadDef(outputPath = dir, formats = Seq("csv", "json"),
+      filenamePattern = "sf", singleFile = true)) === Some(4L))
+    assert(counted(LoadDef(outputPath = dir, formats = Seq("tsv"),
+      filenamePattern = "z", zip = true)) === Some(4L))
+    assert(counted(LoadDef(outputPath = dir, formats = Seq("parquet"),
+      filenamePattern = "d")) === None)
+  }
+
   // ----- W6: ZIP packaging golden -------------------------------------
   test("W6: zip contains per-format outputs, metadata, and intermediate iff non-empty") {
     val dir = tmpDir()
