@@ -294,7 +294,6 @@ object JsonConfig {
       def lng(key: String, dflt: Long): Long =
         if (gf.path(key).isNumber) gf.path(key).asLong() else dflt
       Some(GopherFilterDef(
-        idField = str(gf.path("id_field")).getOrElse(sys.error("gopher_filter missing id_field")),
         textField = str(gf.path("text_field")).getOrElse(sys.error("gopher_filter missing text_field")),
         minWords = lng("min_words", 50),
         maxWords = lng("max_words", 100000),
@@ -309,14 +308,13 @@ object JsonConfig {
     c4Clean = if (n.path("c4_clean").isObject) {
       val cc = n.path("c4_clean")
       Some(C4CleanDef(
-        idField = str(cc.path("id_field")).getOrElse(sys.error("c4_clean missing id_field")),
         textField = str(cc.path("text_field")).getOrElse(sys.error("c4_clean missing text_field")),
         window = int(cc.path("window")).getOrElse(10),
         minSegWords = int(cc.path("min_seg_words")).getOrElse(5),
         minSegs = int(cc.path("min_segs")).getOrElse(3),
         blacklist =
           if (cc.path("blacklist").isArray) strSeq(cc.path("blacklist"))
-          else Seq("lorem", "ipsum", "javascript", "{", "}")))
+          else graft.operators.TextOps.C4Blacklist))
     } else None,
     dsirSelect = if (n.path("dsir_select").isObject) {
       val ds = n.path("dsir_select")
@@ -337,7 +335,6 @@ object JsonConfig {
       val dDup = Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
         9 -> 0.11, 10 -> 0.10)
       Some(RepetitionFilterDef(
-        idField = str(rf.path("id_field")).getOrElse(sys.error("repetition_filter missing id_field")),
         textField = str(rf.path("text_field")).getOrElse(sys.error("repetition_filter missing text_field")),
         topThresholds = dTop.map { case (k, v) => k -> num(s"top_$k", v) },
         dupThresholds = dDup.map { case (k, v) => k -> num(s"dup_$k", v) }))

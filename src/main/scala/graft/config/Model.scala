@@ -462,7 +462,6 @@ final case class EpochPackDef(
   * transform — keep rows whose `textField` passes every rule (see
   * TextOps.gopherRules for the rule semantics and defaults). */
 final case class GopherFilterDef(
-    idField: String,
     textField: String,
     minWords: Long = 50,
     maxWords: Long = 100000,
@@ -479,13 +478,11 @@ final case class GopherFilterDef(
   * keep-rules (≥ minSegWords words, no blacklisted token) and rows
   * keeping fewer than `minSegs` segments drop (see TextOps.c4Clean). */
 final case class C4CleanDef(
-    idField: String,
     textField: String,
     window: Int = 10,
     minSegWords: Int = 5,
     minSegs: Int = 3,
-    blacklist: Seq[String] =
-      Seq("lorem", "ipsum", "javascript", "{", "}"))
+    blacklist: Seq[String] = graft.operators.TextOps.C4Blacklist)
 
 /** LLM-extension: Gopher repetition gate inside a pipeline's
   * transform — keep rows whose `textField` passes the full top/dup
@@ -493,7 +490,6 @@ final case class C4CleanDef(
   * are the published defaults, overridable per n as `top_2`..`top_4`
   * and `dup_5`..`dup_10`). */
 final case class RepetitionFilterDef(
-    idField: String,
     textField: String,
     topThresholds: Map[Int, Double] =
       Map(2 -> 0.20, 3 -> 0.18, 4 -> 0.16),

@@ -382,7 +382,6 @@ object TomlConfig {
       gopherFilter =
         if (!declared("gopher_filter", gf)) None
         else Some(GopherFilterDef(
-          idField = str(gf.get("id_field")).getOrElse(sys.error("gopher_filter missing id_field")),
           textField = str(gf.get("text_field")).getOrElse(sys.error("gopher_filter missing text_field")),
           minWords = long(gf.get("min_words")).getOrElse(50L),
           maxWords = long(gf.get("max_words")).getOrElse(100000L),
@@ -396,14 +395,13 @@ object TomlConfig {
       c4Clean =
         if (!declared("c4_clean", cc)) None
         else Some(C4CleanDef(
-          idField = str(cc.get("id_field")).getOrElse(sys.error("c4_clean missing id_field")),
           textField = str(cc.get("text_field")).getOrElse(sys.error("c4_clean missing text_field")),
           window = long(cc.get("window")).getOrElse(10L).toInt,
           minSegWords = long(cc.get("min_seg_words")).getOrElse(5L).toInt,
           minSegs = long(cc.get("min_segs")).getOrElse(3L).toInt,
           blacklist =
             if (cc.contains("blacklist")) strSeq(cc.get("blacklist"))
-            else Seq("lorem", "ipsum", "javascript", "{", "}"))),
+            else graft.operators.TextOps.C4Blacklist)),
       dsirSelect =
         if (!declared("dsir_select", ds)) None
         else Some(DsirSelectDef(
@@ -421,7 +419,6 @@ object TomlConfig {
           val dDup = Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
             9 -> 0.11, 10 -> 0.10)
           Some(RepetitionFilterDef(
-            idField = str(rf.get("id_field")).getOrElse(sys.error("repetition_filter missing id_field")),
             textField = str(rf.get("text_field")).getOrElse(sys.error("repetition_filter missing text_field")),
             topThresholds = dTop.map { case (k, v) =>
               k -> dbl(rf.get(s"top_$k")).getOrElse(v) },

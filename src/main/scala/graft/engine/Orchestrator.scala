@@ -664,23 +664,20 @@ object Orchestrator {
         .filter(col("kept") === 1L).select(col(lf.idField))
       df = df.join(keep, Seq(lf.idField), "left_semi")
     }
+    // The Gopher, C4 and repetition stages are narrow per-row filters:
+    // each row is judged by its own text, in one pass over the input.
     t.gopherFilter.foreach { gf =>
-      val keep = graft.operators.TextOps.gopherRules(
-        df, gf.idField, gf.textField,
+      df = df.filter(graft.operators.TextOps.gopherKeep(col(gf.textField),
         gf.minWords, gf.maxWords, gf.minMeanWordLen, gf.maxMeanWordLen,
         gf.maxSymbolRatio, gf.maxBulletFrac, gf.maxEllipsisFrac,
-        gf.minAlphaFrac, gf.minStopwords)
-        .filter(col("keep")).select(col(gf.idField))
-      df = df.join(keep, Seq(gf.idField), "left_semi")
+        gf.minAlphaFrac, gf.minStopwords))
     }
     t.c4Clean.foreach { cc =>
-      val cleaned = graft.operators.TextOps.c4Clean(
-        df, cc.idField, cc.textField,
-        cc.window, cc.minSegWords, cc.minSegs, cc.blacklist)
-        .select(col(cc.idField), col("text_clean"))
-      df = df.join(cleaned, Seq(cc.idField))
-        .withColumn(cc.textField, col("text_clean"))
-        .drop("text_clean")
+      df = df.withColumn("__c4", graft.operators.TextOps.c4CleanText(
+          col(cc.textField), cc.window, cc.minSegWords, cc.blacklist))
+        .filter(col("__c4.n_kept") >= cc.minSegs)
+        .withColumn(cc.textField, col("__c4.text_clean"))
+        .drop("__c4")
     }
     t.dsirSelect.foreach { ds =>
       val target = spark.read.format(ds.targetFormat).load(ds.targetPath)
@@ -695,10 +692,12 @@ object Orchestrator {
       df = df.join(top, Seq(ds.idField))
     }
     t.repetitionFilter.foreach { rf =>
-      val keep = graft.operators.TextOps.gopherRepetition(
-        df, rf.idField, rf.textField, rf.topThresholds, rf.dupThresholds)
-        .filter(col("keep")).select(col(rf.idField))
-      df = df.join(keep, Seq(rf.idField), "left_semi")
+      val text = col(rf.textField)
+      df = df.withColumn("__cov", graft.operators.TextOps.gopherRepCoverage(
+          text, rf.topThresholds.keys.toSeq, rf.dupThresholds.keys.toSeq))
+        .filter(graft.operators.TextOps.gopherRepKeep(col("__cov"),
+          length(text), rf.topThresholds, rf.dupThresholds))
+        .drop("__cov")
     }
     t.sample.foreach { sd =>
       df = graft.operators.TextOps.stratifiedSample(

@@ -40,10 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    reassembly joins segment words and segments with single spaces
   *    (array_join semantics — empty words join as empty strings).
   * NULL text → NULL struct (null-intolerant unary), matching the
-  * composed form's null-in-null-out columns. */
+  * composed form's null-in-null-out columns. Evaluated once per row
+  * however many fields are read ([[EvalOncePerRow]]). */
 case class C4CleanText(
     child: Expression, window: Int, minSegWords: Int,
-    blacklist: Seq[String]) extends UnaryExpression {
+    blacklist: Seq[String]) extends UnaryExpression with EvalOncePerRow {
   require(window > 0, s"segment window must be positive: $window")
   require(minSegWords >= 1 && minSegWords <= window,
     s"minSegWords must be in [1, window]: $minSegWords")

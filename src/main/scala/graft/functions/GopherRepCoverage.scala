@@ -38,10 +38,12 @@ import org.apache.spark.sql.types._
   * Returns `struct(top_<n>.. BIGINT, dup_<n>.. BIGINT)` (zeros when
   * the doc has no n-gram — the old left-join + `na.fill(0)` rendering);
   * NULL words array → NULL struct (null-intolerant unary), which the
-  * operator coalesces to 0 exactly as the old join path filled it. */
+  * operator coalesces to 0 exactly as the old join path filled it.
+  * Evaluated once per row however many fields are read
+  * ([[EvalOncePerRow]]). */
 case class GopherRepCoverage(
     child: Expression, topNs: Seq[Int], dupNs: Seq[Int])
-  extends UnaryExpression {
+  extends UnaryExpression with EvalOncePerRow {
   private val allNs = (topNs ++ dupNs).distinct.sorted
   require(allNs.nonEmpty && allNs.min >= 2 && allNs.max < 64,
     s"n-gram sizes must be in [2, 64): $allNs")
@@ -102,8 +104,10 @@ object GopherRepCoverage {
         }
         i += 1
       }
-      // one map over (gram key · 64 + n): value = [count, maxLen]
-      val m = new java.util.HashMap[Long, Array[Long]]()
+      // one map over (gram key · 64 + n): value = [count, maxLen],
+      // pre-sized for words × sizes grams (load ≤ 3/4): it never resizes
+      val m = new java.util.HashMap[Long, Array[Long]](
+        math.min(len.toLong * allNs.length * 4 / 3 + 1, 1L << 30).toInt)
       i = 0
       while (i < len) {
         if (!nullW(i)) {

@@ -1020,55 +1020,19 @@ object TextOps {
       maxSymbolRatio: Double = 0.1,
       maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
       minAlphaFrac: Double = 0.8, minStopwords: Int = 2): DataFrame = {
-    val text = col(textCol)
-    val ws = split(text, " ")
-    val wsl = split(lower(text), " ")
-    val lines = split(text, "\n")
-    val nWords = size(ws).cast("long")
-    val nLines = size(lines).cast("long")
-    val sumLen = aggregate(ws, lit(0L), (a, w) => a + length(w))
-    val meanLen = sumLen.cast("double") / nWords
-    val nHash = length(text) - length(replace(text, lit("#"), lit("")))
-    val nEll = (length(text) - length(replace(text, lit("..."), lit("")))) / 3
-    val symbolRatio = (nHash + nEll).cast("double") / nWords
-    val bulletFrac = size(filter(lines, l =>
-      startswith(l, lit("- ")) || startswith(l, lit("* ")) ||
-        startswith(l, lit("• ")))).cast("double") / nLines
-    val ellipsisFrac = size(filter(lines, l => endswith(l, lit("..."))))
-      .cast("double") / nLines
-    val alphaFrac = size(filter(ws, w => w.rlike("[a-zA-Z]")))
-      .cast("double") / nWords
-    val nStop = size(filter(
-      array(GopherStops.map(lit): _*), s => array_contains(wsl, s)))
-      .cast("long")
-    val rWords = nWords >= minWords && nWords <= maxWords
-    val rMeanLen = meanLen >= minMeanWordLen && meanLen <= maxMeanWordLen
-    val rSymbol = symbolRatio <= maxSymbolRatio
-    val rBullet = bulletFrac <= maxBulletFrac
-    val rEllipsis = ellipsisFrac <= maxEllipsisFrac
-    val rAlpha = alphaFrac >= minAlphaFrac
-    val rStop = nStop >= minStopwords
-    df.select(col(idCol),
-      nWords.as("n_words"),
-      round(meanLen, 6).as("mean_word_len"),
-      round(symbolRatio, 6).as("symbol_ratio"),
-      round(bulletFrac, 6).as("bullet_frac"),
-      round(ellipsisFrac, 6).as("ellipsis_frac"),
-      round(alphaFrac, 6).as("alpha_frac"),
-      nStop.as("n_stop"),
-      rWords.as("r_words"), rMeanLen.as("r_mean_len"),
-      rSymbol.as("r_symbol"), rBullet.as("r_bullet"),
-      rEllipsis.as("r_ellipsis"), rAlpha.as("r_alpha"),
-      rStop.as("r_stop"),
-      // r19: keep is the conjunction of the flags ALREADY computed in
-      // this projection — the previous gopherKeep(text, ...) call
-      // duplicated the whole signal tree (splits + four interpreted
-      // filter/aggregate lambdas) inside the same project, and
-      // codegen subexpression elimination does not cover the
-      // interpreted HOF fallbacks. coalesce(..., false) reproduces
-      // gopherKeep's NULL-text → false contract bit for bit.
-      coalesce(rWords && rMeanLen && rSymbol && rBullet &&
-        rEllipsis && rAlpha && rStop, lit(false)).as("keep"))
+    val g = gopherSignals(col(textCol), minWords, maxWords,
+      minMeanWordLen, maxMeanWordLen, maxSymbolRatio, maxBulletFrac,
+      maxEllipsisFrac, minAlphaFrac, minStopwords)
+    df.select(Seq(col(idCol),
+      g.nWords.as("n_words"),
+      round(g.meanLen, 6).as("mean_word_len"),
+      round(g.symbolRatio, 6).as("symbol_ratio"),
+      round(g.bulletFrac, 6).as("bullet_frac"),
+      round(g.ellipsisFrac, 6).as("ellipsis_frac"),
+      round(g.alphaFrac, 6).as("alpha_frac"),
+      g.nStop.as("n_stop")) ++
+      g.flags.map { case (name, flag) => flag.as(name) } :+
+      g.keep.as("keep"): _*)
   }
 
   /** The [[gopherRules]] `keep` conjunction as a standalone per-row
@@ -1082,7 +1046,28 @@ object TextOps {
       minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1,
       maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
-      minAlphaFrac: Double = 0.8, minStopwords: Int = 2): Column = {
+      minAlphaFrac: Double = 0.8, minStopwords: Int = 2): Column =
+    gopherSignals(text, minWords, maxWords, minMeanWordLen,
+      maxMeanWordLen, maxSymbolRatio, maxBulletFrac, maxEllipsisFrac,
+      minAlphaFrac, minStopwords).keep
+
+  /** The unrounded Gopher signals and the per-rule flags, in report
+    * order — the one definition [[gopherRules]] renders and
+    * [[gopherKeep]] gates on. */
+  private final case class GopherSignals(
+      nWords: Column, meanLen: Column, symbolRatio: Column,
+      bulletFrac: Column, ellipsisFrac: Column, alphaFrac: Column,
+      nStop: Column, flags: Seq[(String, Column)]) {
+    /** Every rule holds; NULL text → false. */
+    def keep: Column = coalesce(flags.map(_._2).reduce(_ && _), lit(false))
+  }
+
+  private def gopherSignals(
+      text: Column, minWords: Long, maxWords: Long,
+      minMeanWordLen: Double, maxMeanWordLen: Double,
+      maxSymbolRatio: Double, maxBulletFrac: Double,
+      maxEllipsisFrac: Double, minAlphaFrac: Double,
+      minStopwords: Int): GopherSignals = {
     val ws = split(text, " ")
     val wsl = split(lower(text), " ")
     val lines = split(text, "\n")
@@ -1100,18 +1085,22 @@ object TextOps {
       .cast("double") / nLines
     val alphaFrac = size(filter(ws, w => w.rlike("[a-zA-Z]")))
       .cast("double") / nWords
-    val nStop = size(filter(
-      array(GopherStops.map(lit): _*), s => array_contains(wsl, s)))
-      .cast("long")
-    coalesce(
-      nWords >= minWords && nWords <= maxWords &&
-        meanLen >= minMeanWordLen && meanLen <= maxMeanWordLen &&
-        symbolRatio <= maxSymbolRatio &&
-        bulletFrac <= maxBulletFrac &&
-        ellipsisFrac <= maxEllipsisFrac &&
-        alphaFrac >= minAlphaFrac &&
-        nStop >= minStopwords,
-      lit(false))
+    // distinct stopwords present: the word array is built once, outside
+    // any lambda (GopherStops has no duplicates, so the intersection's
+    // size is the count); NULL text counts 0
+    val nStop = coalesce(
+      array_size(array_intersect(array(GopherStops.map(lit): _*), wsl)),
+      lit(0)).cast("long")
+    GopherSignals(nWords, meanLen, symbolRatio, bulletFrac, ellipsisFrac,
+      alphaFrac, nStop, Seq(
+        "r_words" -> (nWords >= minWords && nWords <= maxWords),
+        "r_mean_len" ->
+          (meanLen >= minMeanWordLen && meanLen <= maxMeanWordLen),
+        "r_symbol" -> (symbolRatio <= maxSymbolRatio),
+        "r_bullet" -> (bulletFrac <= maxBulletFrac),
+        "r_ellipsis" -> (ellipsisFrac <= maxEllipsisFrac),
+        "r_alpha" -> (alphaFrac >= minAlphaFrac),
+        "r_stop" -> (nStop >= minStopwords)))
   }
 
   /** Deterministic stratified sampling with per-stratum rates — the
@@ -2433,25 +2422,37 @@ object TextOps {
   def c4Clean(
       df: DataFrame, idCol: String, textCol: String,
       window: Int = 10, minSegWords: Int = 5, minSegs: Int = 3,
-      blacklist: Seq[String] =
-        Seq("lorem", "ipsum", "javascript", "{", "}"),
-      carry: Seq[String] = Nil): DataFrame = {
-    require(window > 0, s"segment window must be positive: $window")
-    require(minSegWords >= 1 && minSegWords <= window,
-      s"minSegWords must be in [1, window]: $minSegWords")
-    val kernel = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.C4CleanText(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          col(textCol)),
-        window, minSegWords, blacklist))
+      blacklist: Seq[String] = C4Blacklist,
+      carry: Seq[String] = Nil): DataFrame =
     // `carry` threads extra columns (event time, provenance) through —
     // the streaming ingest composition needs the timestamp to survive
-    df.select(col(idCol) +: carry.map(col) :+ kernel.as("__c4"): _*)
+    df.select(col(idCol) +: carry.map(col) :+
+        c4CleanText(col(textCol), window, minSegWords, blacklist)
+          .as("__c4"): _*)
       .select(col(idCol) +: carry.map(col) :+
         col("__c4.n_total").as("n_total") :+
         col("__c4.n_kept").as("n_kept") :+
         col("__c4.text_clean").as("text_clean"): _*)
       .filter(col("n_kept") >= minSegs)
+
+  /** C4's default segment blacklist. */
+  val C4Blacklist: Seq[String] = Seq("lorem", "ipsum", "javascript", "{", "}")
+
+  /** The [[c4Clean]] kernel as a Column:
+    * `struct(n_total, n_kept, text_clean)` for one text, NULL for NULL
+    * text. It runs once per row however many of its fields are read
+    * ([[graft.functions.EvalOncePerRow]]), so a caller may gate on
+    * `n_kept` and keep `text_clean` from the same column. */
+  def c4CleanText(
+      text: Column, window: Int = 10, minSegWords: Int = 5,
+      blacklist: Seq[String] = C4Blacklist): Column = {
+    require(window > 0, s"segment window must be positive: $window")
+    require(minSegWords >= 1 && minSegWords <= window,
+      s"minSegWords must be in [1, window]: $minSegWords")
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.C4CleanText(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text),
+        window, minSegWords, blacklist))
   }
 
   /** Engine-portable fixed-point binary logarithm: ≈ ⌊log2(n)·2^bits⌋
@@ -2604,34 +2605,21 @@ object TextOps {
       dupThresholds: Map[Int, Double] =
         Map(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
             9 -> 0.11, 10 -> 0.10)): DataFrame = {
-    val ns = (topThresholds.keySet ++ dupThresholds.keySet).toSeq.sorted
-    require(ns.nonEmpty && ns.min >= 2,
-      s"n-gram sizes must be >= 2: $ns")
     val topNs = topThresholds.keys.toSeq.sorted
     val dupNs = dupThresholds.keys.toSeq.sorted
-    val covCol = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.GopherRepCoverage(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          LlmOps.words(col(textCol))), topNs, dupNs))
     // NULL text → NULL struct → coalesce to 0, the exact rendering the
     // old left-join + na.fill(0) path produced for docs with no grams
     val perDoc = df.select(col(idCol),
         length(col(textCol)).cast("long").as("__chars"),
-        covCol.as("__cov"))
-      .select(Seq(col(idCol), col("__chars")) ++
+        gopherRepCoverage(col(textCol), topNs, dupNs).as("__cov"))
+      .select(Seq(col(idCol), col("__chars"),
+        gopherRepKeep(col("__cov"), col("__chars"),
+          topThresholds, dupThresholds).as("keep")) ++
         topNs.map(n =>
           coalesce(col(s"__cov.top_$n"), lit(0L)).as(s"__top_$n")) ++
         dupNs.map(n =>
           coalesce(col(s"__cov.dup_$n"), lit(0L)).as(s"__dup_$n")): _*)
-    // fractions + flags on unrounded values
     val chars = col("__chars").cast("double")
-    val fracs =
-      topThresholds.keys.toSeq.sorted.map(n =>
-        (s"top_${n}gram_frac", s"__top_$n", topThresholds(n))) ++
-        dupThresholds.keys.toSeq.sorted.map(n =>
-          (s"dup_${n}gram_frac", s"__dup_$n", dupThresholds(n)))
-    val keep = fracs.map { case (_, c, th) => col(c) / chars <= th }
-      .reduce(_ && _)
     // Rendered fraction: integer-exact HALF-UP rounding at 6 digits,
     // floor((2e6·cov + chars)/(2·chars)) / 1e6 in BIGINT — NOT
     // round(double, 6). The double form hit a real tie at sf1
@@ -2651,10 +2639,42 @@ object TextOps {
     // and 0 via coalesce for NULL text — whose NULL chars still makes
     // every fraction NULL in both engines, exactly as the old
     // left-join + scoped na.fill rendered it.
-    perDoc
-      .select(col(idCol) +:
-        fracs.map { case (name, c, _) => renderedFrac(c).as(name) } :+
-        coalesce(keep, lit(false)).as("keep"): _*)
+    perDoc.select(col(idCol) +:
+      (topNs.map(n => renderedFrac(s"__top_$n").as(s"top_${n}gram_frac")) ++
+        dupNs.map(n => renderedFrac(s"__dup_$n").as(s"dup_${n}gram_frac"))) :+
+      col("keep"): _*)
+  }
+
+  /** The [[gopherRepetition]] kernel as a Column:
+    * `struct(top_<n>.., dup_<n>..)` coverages over the text's words for
+    * the given n-gram sizes, NULL for NULL text. It runs once per row
+    * however many of its fields are read
+    * ([[graft.functions.EvalOncePerRow]]). */
+  def gopherRepCoverage(
+      text: Column, topNs: Seq[Int], dupNs: Seq[Int]): Column = {
+    val ns = (topNs ++ dupNs).distinct.sorted
+    require(ns.nonEmpty && ns.min >= 2,
+      s"n-gram sizes must be >= 2: $ns")
+    org.apache.spark.sql.graftbridge.ColumnBridge.column(
+      graft.functions.GopherRepCoverage(
+        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+          LlmOps.words(text)), topNs.sorted, dupNs.sorted))
+  }
+
+  /** The [[gopherRepetition]] keep rule over a [[gopherRepCoverage]]
+    * column: every coverage fraction (coverage / `chars`, a missing
+    * coverage read as 0) at or under its threshold, compared
+    * unrounded. NULL text (NULL `chars`) → false. */
+  def gopherRepKeep(
+      cov: Column, chars: Column,
+      topThresholds: Map[Int, Double],
+      dupThresholds: Map[Int, Double]): Column = {
+    val fields = topThresholds.toSeq.sorted.map { case (n, th) =>
+      (s"top_$n", th) } ++
+      dupThresholds.toSeq.sorted.map { case (n, th) => (s"dup_$n", th) }
+    coalesce(fields.map { case (f, th) =>
+      coalesce(cov.getField(f), lit(0L)) / chars.cast("double") <= th
+    }.reduce(_ && _), lit(false))
   }
 }
 

@@ -3156,25 +3156,16 @@ object TextQueries {
          |  round(CAST(score AS DOUBLE) / 1048576.0, 6) AS lr
          |FROM sc ORDER BY score DESC, doc_id LIMIT 150""".stripMargin) {
       (s, dir) =>
-        val docs = t(s, dir, "documents")
-        val cleaned = TextOps.c4Clean(docs, "doc_id", "text",
-          window = 10, minSegWords = 5, minSegs = 3)
-          .select(col("doc_id"), col("text_clean").as("tc"))
-        // Pin BEFORE the gate: gopherKeep references the cleaned text
-        // ~10 times, and CollapseProject would inline the full C4
-        // reassembly expression into every reference (the LD14
-        // optimizer hazard — measured 6.4 s for the filter alone);
-        // against a materialized column it is one cheap per-row pass.
-        val shaped = docs.select(col("doc_id"), col("source"))
-          .join(cleaned, Seq("doc_id"))
-          .localCheckpoint(true)
-        // The gate is a plain per-row filter, not a report+semi-join —
-        // ONE evaluation — and the gated frame is pinned too (same
-        // discipline as llm_curation_e2e): the DSIR stage reads it
-        // from four consumers (target/raw counts, totals, scores).
-        // Measured at sf0.1: 10.2 s unpinned+semi-join, 7.4 s with
-        // only the post-gate pin, 2.6 s with this shape.
-        val kept = shaped
+        // The gate is a plain per-row filter over the cleaned text, not
+        // a report+semi-join. gopherKeep reads tc ~10 times, but the C4
+        // kernel still runs once per row (EvalOncePerRow keeps it out of
+        // those references), so nothing is pinned before the gate. The
+        // gated frame is pinned (same discipline as llm_curation_e2e):
+        // the DSIR stage reads it from four consumers (target/raw
+        // counts, totals, scores).
+        val kept = TextOps.c4Clean(t(s, dir, "documents"), "doc_id", "text",
+            window = 10, minSegWords = 5, minSegs = 3, carry = Seq("source"))
+          .select(col("doc_id"), col("source"), col("text_clean").as("tc"))
           .filter(TextOps.gopherKeep(col("tc"),
             minWords = 40, minStopwords = 1))
           .localCheckpoint(true)

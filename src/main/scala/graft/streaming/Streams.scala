@@ -438,24 +438,11 @@ object Streams {
     // and at the 0.5 default the threshold is logit 0.0 — an integer-
     // exact w_sum sign test no rounding or libm noise can flip
     val logitMin = math.log(minScore / (1.0 - minScore))
-    // PIN the cleaned text before the gates: gopherKeep references
-    // text_clean ~10 times and predicate pushdown substitutes the full
-    // C4 reassembly into every reference (measured: 21 copies in the
-    // optimized plan, 9.4 s vs 0.7 s at sf0.1 — tools/CurationPlanProbe).
-    // Batch pins with the curation2 localCheckpoint discipline; a
-    // stream can't checkpoint, so it pins with a typed map(identity)
-    // round-trip — an opaque-lambda barrier the optimizer cannot push
-    // predicates through or collapse across (1 copy, 1.8 s equivalent;
-    // non-deterministic dummy columns do NOT work — ColumnPruning
-    // deletes them and the pushdown proceeds).
-    val cleaned0 = TextOps.c4Clean(df, idCol, textCol, window,
-      minSegWords, minSegs, carry = Seq(tsCol))
-    val cleaned =
-      if (df.isStreaming) {
-        val enc = org.apache.spark.sql.Encoders.row(cleaned0.schema)
-        cleaned0.map(identity(_))(enc)
-      } else cleaned0.localCheckpoint(true)
-    val gated = cleaned
+    // gopherKeep reads text_clean ~10 times; the C4 kernel still runs
+    // once per row, because it is marked EvalOncePerRow and so is never
+    // inlined into those references. Batch and stream share this plan.
+    val gated = TextOps.c4Clean(df, idCol, textCol, window,
+        minSegWords, minSegs, carry = Seq(tsCol))
       .filter(TextOps.gopherKeep(col("text_clean"),
         minWords = minWords, minStopwords = minStopwords))
       .withColumn("__c", TextOps.classifierScoreRow(col("text_clean"),

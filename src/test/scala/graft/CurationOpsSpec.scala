@@ -130,6 +130,14 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).toSeq === Seq(2L))
   }
 
+  test("c4Clean plan: the C4 kernel appears once in the optimized plan, " +
+    "not once per field read") {
+    val df = spark.range(4).select(col("id").as("doc_id"),
+      concat(lit(goodText), lit(" "), col("id")).as("text"))
+    assert(TestSpark.kernelCopies[graft.functions.C4CleanText](
+      TextOps.c4Clean(df, "doc_id", "text")) === 1)
+  }
+
   test("c4Clean plan: per-row, no Exchange") {
     val df = Seq((1L, goodText)).toDF("doc_id", "text")
     val plan = TextOps.c4Clean(df, "doc_id", "text")
@@ -328,6 +336,16 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       s"expected a shuffle-free per-row plan:\n$plan")
     assert(plan.contains("graft_gopher_rep_coverage"), plan)
+  }
+
+  test("gopherRepetition(df).filter(keep) plan: the coverage kernel " +
+    "appears once, not once per fraction and per pushed-down rule") {
+    val df = spark.range(4).select(col("id").as("doc_id"),
+      concat(lit(goodText), lit(" "), col("id")).as("text"))
+    val gated = TextOps.gopherRepetition(df, "doc_id", "text")
+      .filter(col("keep"))
+    assert(TestSpark.kernelCopies[graft.functions.GopherRepCoverage](
+      gated) === 1, gated.queryExecution.optimizedPlan.toString)
   }
 
   // ----- probabilistic score sampling ---------------------------------

@@ -762,12 +762,12 @@ class OrchestratorSpec extends AnyFunSuite {
     val seq = SequenceDef("s", Seq("g"), Seq(
       PipelineDef("g", FileSource(s"$dir/docs"),
         transform = TransformDef(addProcessedFlags = false,
-          gopherFilter = Some(GopherFilterDef(
-            idField = "doc_id", textField = "text"))))))
+          gopherFilter = Some(GopherFilterDef(textField = "text"))))))
     val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
     val out = ctx.results("g").df.get.collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
-    // the filter is a semi-join: no report columns leak into the row
+    // the stage is a plain per-row filter: no report columns leak into
+    // the row
     assert(!out.head.schema.fieldNames.contains("keep"))
   }
 
@@ -783,8 +783,7 @@ class OrchestratorSpec extends AnyFunSuite {
     val seq = SequenceDef("s", Seq("c"), Seq(
       PipelineDef("c", FileSource(s"$dir/docs"),
         transform = TransformDef(addProcessedFlags = false,
-          c4Clean = Some(C4CleanDef(idField = "doc_id",
-            textField = "text"))))))
+          c4Clean = Some(C4CleanDef(textField = "text"))))))
     val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
     val out = ctx.results("c").df.get.collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
@@ -803,11 +802,70 @@ class OrchestratorSpec extends AnyFunSuite {
     val seq = SequenceDef("s", Seq("r"), Seq(
       PipelineDef("r", FileSource(s"$dir/docs"),
         transform = TransformDef(addProcessedFlags = false,
-          repetitionFilter = Some(RepetitionFilterDef(
-            idField = "doc_id", textField = "text"))))))
+          repetitionFilter = Some(RepetitionFilterDef(textField = "text"))))))
     val ctx = Orchestrator.execute(spark, seq, unpersistOnEnd = false)
     val out = ctx.results("r").df.get.collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
+  }
+
+  // a doc every curation stage keeps: 60 distinct words with stopwords;
+  // spam fails gopher_filter and repetition_filter, tiny fails c4_clean
+  private val curationKeeper =
+    (Seq("the", "report", "that", "we", "have", "shared", "with") ++
+      (1 to 53).map(i => s"uniq${i}w")).mkString(" ")
+  private val spam = (1 to 60).map(_ => "spam").mkString(" ")
+  private val tiny = (1 to 14).map(i => s"w$i").mkString(" ")
+
+  test("curation stages c4_clean -> gopher_filter -> repetition_filter " +
+    "chain into one per-row plan: each kernel appears once, no join") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cur").toString
+    Seq((1L, curationKeeper), (2L, spam), (3L, tiny)).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/docs")
+    val stages = Seq(
+      TransformDef(addProcessedFlags = false, c4Clean = Some(
+        C4CleanDef(textField = "text"))),
+      TransformDef(addProcessedFlags = false, gopherFilter = Some(
+        GopherFilterDef(textField = "text"))),
+      TransformDef(addProcessedFlags = false, repetitionFilter = Some(
+        RepetitionFilterDef(textField = "text"))))
+    val ctx = new graft.engine.RunContext("chain")
+    val out = stages.zipWithIndex.foldLeft(spark.read.parquet(s"$dir/docs")) {
+      case (df, (t, i)) => Orchestrator.transform(spark,
+        filePipeline(s"p$i", s"$dir/docs", t), ctx, df)._1
+    }
+    val plan = out.queryExecution.optimizedPlan
+    assert(TestSpark.copiesIn[graft.functions.C4CleanText](plan) === 1, plan)
+    assert(TestSpark.copiesIn[graft.functions.GopherRepCoverage](plan) === 1,
+      plan)
+    assert(plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, plan)
+    assert(out.select("doc_id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("duplicate ids: c4_clean, gopher_filter and repetition_filter " +
+    "judge each row by its own text") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_dup").toString
+    val keeper2 = curationKeeper.replace("uniq", "othr")
+    // three rows share doc_id 1: two pass every stage, one fails it
+    def run(stage: String, failing: String, t: TransformDef): Seq[String] = {
+      val path = s"$dir/$stage"
+      Seq((1L, curationKeeper), (1L, keeper2), (1L, failing))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(path)
+      val seq = SequenceDef("s", Seq("d"), Seq(filePipeline("d", path, t)))
+      Orchestrator.execute(spark, seq, unpersistOnEnd = false)
+        .results("d").df.get.select("text").as[String].collect().toSeq.sorted
+    }
+    val expect = Seq(curationKeeper, keeper2).sorted
+    assert(run("c4", tiny, TransformDef(addProcessedFlags = false,
+      c4Clean = Some(C4CleanDef(textField = "text"))))
+      === expect)
+    assert(run("gopher", spam, TransformDef(addProcessedFlags = false,
+      gopherFilter = Some(GopherFilterDef(textField = "text")))) === expect)
+    assert(run("rep", spam, TransformDef(addProcessedFlags = false,
+      repetitionFilter = Some(RepetitionFilterDef(textField = "text")))) === expect)
   }
 
   test("dsir_select transform keeps the top-k docs by importance " +

@@ -572,24 +572,19 @@ class PlanSpec extends AnyFunSuite {
     "the optimized plan carries the C4 reassembly at most once, never " +
     "inlined per gate reference") {
     import org.apache.spark.sql.functions._
-    // the unpinned composition measured 21 reassembly copies and 13x
-    // the runtime (tools/CurationPlanProbe) — predicate pushdown
-    // substitutes text_clean's definition into every reference of the
-    // ~10-term Gopher predicate; this locks the pin for BOTH branches
+    // gopherKeep reads text_clean ~10 times; without the EvalOncePerRow
+    // marker CollapseProject and the filter pushdown substitute the
+    // kernel into every reference (22 copies). Batch and stream build
+    // the same plan, with no pin or barrier.
     val docs = spark.read.parquet(
       "/root/testdata/sf0.001/documents.parquet")
       .withColumn("ts", timestamp_seconds(lit(1704067200L) + col("doc_id")))
     val weights = Map(0L -> 1L)
-    def copies(df: org.apache.spark.sql.DataFrame): Int =
-      "array_join\\(transform\\(".r
-        .findAllIn(df.queryExecution.optimizedPlan.toString).length
     val batch = graft.streaming.Streams.curationIngest(
       docs, "doc_id", "text", "ts", weights, nBuckets = 64,
       minWords = 40, minStopwords = 1)
-    assert(copies(batch) === 0,
-      "batch branch pins via localCheckpoint — zero inline reassemblies")
-    // streaming branch: same composition over a streaming relation;
-    // the typed-barrier plan keeps exactly the ONE defining copy
+    assert(TestSpark.kernelCopies[graft.functions.C4CleanText](batch) === 1,
+      batch.queryExecution.optimizedPlan.toString)
     implicit val sql2 = spark.sqlContext
     import spark.implicits._
     val ms = org.apache.spark.sql.execution.streaming.runtime
@@ -600,9 +595,8 @@ class PlanSpec extends AnyFunSuite {
     // queryExecution.optimizedPlan would run the batch unsupported-ops
     // check on a streaming relation; run the optimizer directly
     val streamOptimized = spark.sessionState.optimizer
-      .execute(stream.queryExecution.analyzed).toString
-    assert("array_join\\(transform\\(".r
-      .findAllIn(streamOptimized).length <= 1,
-      "streaming branch's typed barrier must stop the pushdown inlining")
+      .execute(stream.queryExecution.analyzed)
+    assert(TestSpark.copiesIn[graft.functions.C4CleanText](
+      streamOptimized) === 1, streamOptimized.toString)
   }
 }

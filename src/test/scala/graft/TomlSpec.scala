@@ -819,6 +819,39 @@ class TomlSpec extends AnyFunSuite {
       i.threshold == 0.99 && i.grid == 4))
   }
 
+  test("gopher_filter, c4_clean and repetition_filter need only " +
+    "text_field in both front-ends: they judge each row on its own") {
+    val toml = TomlConfig.loadSequence(
+      """[[pipelines]]
+        |name = "c"
+        |[pipelines.source]
+        |type = "file"
+        |path = "/tmp/docs"
+        |[pipelines.transform.gopher_filter]
+        |text_field = "text"
+        |[pipelines.transform.c4_clean]
+        |text_field = "text"
+        |[pipelines.transform.repetition_filter]
+        |text_field = "text"
+        |""".stripMargin).pipelines.head.transform
+    val json = graft.config.JsonConfig.loadSequence(
+      """{"pipelines": [{
+        |  "name": "c",
+        |  "source": {"type": "file", "path": "/tmp/docs"},
+        |  "transform": {
+        |    "gopher_filter": {"text_field": "text"},
+        |    "c4_clean": {"text_field": "text"},
+        |    "repetition_filter": {"id_field": "ignored", "text_field": "text"}
+        |  }
+        |}]}""".stripMargin).pipelines.head.transform
+    for (t <- Seq(toml, json)) {
+      assert(t.gopherFilter === Some(GopherFilterDef(textField = "text")))
+      assert(t.c4Clean === Some(C4CleanDef(textField = "text")))
+      assert(t.repetitionFilter ===
+        Some(RepetitionFilterDef(textField = "text")))
+    }
+  }
+
   test("a non-integral TOML float in an integer slot fails loud instead " +
     "of silently truncating") {
     val e = intercept[RuntimeException](TomlConfig.loadSequence(
